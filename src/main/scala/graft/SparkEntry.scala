@@ -2853,15 +2853,8 @@ object SparkEntry {
       val st2 = java.nio.file.Files.createTempDirectory("graft-msprt2").toString
       for (b <- 0 to 2) {
         val wave = d.filter(pmod(col("event_id"), lit(3)) === b)
-        // the Σc and Σc² stores are INDEPENDENT (separate dirs, same wave input,
-        // which is already checkpointed) — overlap their per-wave jobs so the
-        // second store's work back-fills the first's scheduling tail (guide §2.6);
-        // within each store the waves stay sequential (b merges b−1's state)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val f1 = Future { GroupingSetsMv.applyBatch(wave, b.toLong, st1, "k", "scope", "c") }
+        GroupingSetsMv.applyBatch(wave, b.toLong, st1, "k", "scope", "c")
         GroupingSetsMv.applyBatch(wave, b.toLong, st2, "k", "scope", "c2")
-        Await.result(f1, scala.concurrent.duration.Duration.Inf)
       }
       def cells(dir0: String) = GroupingSetsMv.current(s, dir0)
         .filter(col("gid") === 1).select(col("k").cast("long").as("k"),

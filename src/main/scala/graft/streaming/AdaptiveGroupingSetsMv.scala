@@ -53,7 +53,7 @@ object AdaptiveGroupingSetsMv {
     * grain at migration time and reads it back from the store's meta afterwards. */
   def applyBatch(batch: DataFrame, batchId: Long, stateDir: String,
       d1: String, d2: String, measure: String,
-      nBuckets: Int = 0, grainThreshold: Long = 100000L, retain: Int = 2): String = {
+      nBuckets: Int = 0, grainThreshold: Long = 100000L): String = {
     val spark = batch.sparkSession
     val fs = new Path(stateDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (BucketedGroupingSetsMv.hasState(spark, bktDir(stateDir))) {
@@ -63,7 +63,7 @@ object AdaptiveGroupingSetsMv {
             s"bucketed state at ${bktDir(stateDir)} has snapshots but no meta — cannot " +
               "resolve the committed bucket count"))
       BucketedGroupingSetsMv.applyBatch(batch, batchId, bktDir(stateDir),
-        d1, d2, measure, nb, retain)
+        d1, d2, measure, nb)
       // sweep a flat orphan left by a crash between the migration commit and its delete
       val f = new Path(flatDir(stateDir))
       if (fs.exists(f)) fs.delete(f, true): Unit
@@ -77,12 +77,12 @@ object AdaptiveGroupingSetsMv {
           BucketedGroupingSetsMv.seedFromSummary(state, batchId - 1, bktDir(stateDir),
             d1, d2, nb)
           BucketedGroupingSetsMv.applyBatch(batch, batchId, bktDir(stateDir),
-            d1, d2, measure, nb, retain)
+            d1, d2, measure, nb)
           fs.delete(new Path(flatDir(stateDir)), true)
           "migrated"
         case _ =>
           GroupingSetsMv.applyBatch(batch, batchId, flatDir(stateDir),
-            d1, d2, measure, retain)
+            d1, d2, measure)
           "flat"
       }
     }

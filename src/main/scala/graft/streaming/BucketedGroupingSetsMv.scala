@@ -29,14 +29,15 @@ import org.apache.spark.sql.types.DecimalType
  * Replay safety is the flat store's state-versioning argument, lifted to manifests:
  * batch b merges against the newest COMMITTED snapshot < b, so its own half-written
  * `w=b` (or an uncommitted `s=b`) can never feed its own merge; the overwrite of both
- * converges on replay. The checkpoint-reset guard is identical (newest snapshot id >
- * incoming batch ⇒ the checkpoint was reset against a surviving state dir — refuse).
+ * converges on replay. The [[CommitLog]] decides which snapshots are committed and
+ * runs the shared checkpoint-reset guard (newest snapshot id > incoming batch ⇒ the
+ * checkpoint was reset against a surviving state dir — refuse).
  * Bucket assignment is a pure function of the grouping key (`xxhash64 mod nBuckets`),
  * so it needs no stored column and no coordination.
  *
  * 100 TB shape: the manifest is O(nBuckets) lines on the driver; the per-batch write
  * shuffles only delta + dirty-bucket state rows; prune deletes any `w=`/`s=` dir not
- * referenced by the `retain` newest snapshots. Compaction is per-bucket by
+ * referenced by the two newest snapshots. Compaction is per-bucket by
  * construction — rewriting bucket i is overwriting `w=<new>/b=<i>` and repointing one
  * manifest line, which is exactly what a batch that touches bucket i already does.
  */
@@ -45,19 +46,9 @@ object BucketedGroupingSetsMv {
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def committedIds(fs: FileSystem, dir: String, prefix: String): Seq[Long] = {
-    val p = new Path(dir)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).iterator
-      .filter(s => s.getPath.getName.startsWith(prefix) &&
-        fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix(prefix).toLong)
-      .toSeq.sorted
-  }
-
   /** Committed snapshots: a snapshot exists once `s=<id>/_SUCCESS` lands. */
-  private def snapshots(fs: FileSystem, stateDir: String): Seq[Long] =
-    committedIds(fs, stateDir, "s=")
+  private def snapshots(fs: FileSystem, stateDir: String): CommitLog.Versions =
+    CommitLog.list(fs, stateDir).versions("s=")
 
   private def readManifest(fs: FileSystem, stateDir: String, snap: Long): Map[Int, Long] = {
     val in = fs.open(new Path(s"$stateDir/s=$snap/manifest"))
@@ -150,23 +141,14 @@ object BucketedGroupingSetsMv {
     * Returns the number of dirty buckets (the rewrite surface — the soak's metric). */
   def applyBatch(batch: DataFrame, batchId: Long, stateDir: String,
       d1: String, d2: String, measure: String,
-      nBuckets: Int = 16, retain: Int = 2): Int = {
+      nBuckets: Int = 16): Int = {
     require(nBuckets > 0)
-    // replay safety depends on the predecessor snapshot surviving the prune: with
-    // retain=1, a crash-replay of batch b finds no committed snapshot < b and would
-    // merge its delta against nothing — refuse the misconfiguration up front
-    require(retain >= 2, s"retain must be >= 2 for at-least-once replay safety (got $retain)")
     val spark = batch.sparkSession
     val fs = fsOf(spark, stateDir)
     checkOrWriteMeta(fs, stateDir, nBuckets, d1, d2)
     val snaps = snapshots(fs, stateDir)
-    snaps.lastOption.filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"bucketed summary state at $stateDir has applied batch_id $m > incoming " +
-          s"$batchId: the stream's checkpoint was reset independently of the state " +
-          "dir — restore the checkpoint or start a fresh state dir")
-    }
-    val priorSnap = snaps.filter(_ < batchId).lastOption
+    snaps.guard("bucketed summary state", batchId)
+    val priorSnap = snaps.before(batchId)
     val priorManifest = priorSnap.map(readManifest(fs, stateDir, _)).getOrElse(Map.empty)
 
     val delta = GroupingSetsMv.batchSummary(batch, d1, d2, measure)
@@ -176,7 +158,7 @@ object BucketedGroupingSetsMv {
     val dirty = delta.select("b").distinct().collect().map(_.getInt(0)).sorted
     if (dirty.isEmpty) { // empty batch: snapshot carries everything forward
       writeManifest(fs, stateDir, batchId, priorManifest)
-      prune(fs, stateDir, retain)
+      prune(fs, stateDir, snaps, batchId)
       return 0
     }
     val priorDirtyPaths = dirty.toSeq.flatMap(b =>
@@ -201,14 +183,14 @@ object BucketedGroupingSetsMv {
       .write.mode("overwrite").partitionBy("b").parquet(s"$stateDir/w=$batchId")
     val newManifest = priorManifest ++ dirty.map(_ -> batchId)
     writeManifest(fs, stateDir, batchId, newManifest) // commit point
-    prune(fs, stateDir, retain)
+    prune(fs, stateDir, snaps, batchId)
     dirty.length
   }
 
   /** Whether the store holds any committed snapshot — the mode probe of
     * [[AdaptiveGroupingSetsMv]]. */
   private[streaming] def hasState(spark: SparkSession, stateDir: String): Boolean =
-    snapshots(fsOf(spark, stateDir), stateDir).nonEmpty
+    snapshots(fsOf(spark, stateDir), stateDir).newest.nonEmpty
 
   /** Seed the store from an ALREADY-AGGREGATED summary (the flat store's committed
     * state) as a committed snapshot at `batchId` — the migration half-step of
@@ -222,7 +204,7 @@ object BucketedGroupingSetsMv {
     val spark = summary.sparkSession
     val fs = fsOf(spark, stateDir)
     checkOrWriteMeta(fs, stateDir, nBuckets, d1, d2)
-    snapshots(fs, stateDir).lastOption.filter(_ > batchId).foreach { m =>
+    snapshots(fs, stateDir).newest.filter(_ > batchId).foreach { m =>
       throw new IllegalStateException(
         s"cannot seed $stateDir at batch $batchId: it already has snapshot $m")
     }
@@ -235,14 +217,17 @@ object BucketedGroupingSetsMv {
     writeManifest(fs, stateDir, batchId, present.map(_ -> batchId).toMap)
   }
 
-  /** Keep the `retain` newest committed snapshots; delete every `s=` dir outside
-    * them and every `w=` dir no retained manifest references (which also sweeps
-    * uncommitted junk left by crashes — an uncommitted dir is unreferencable). */
-  private def prune(fs: FileSystem, stateDir: String, retain: Int): Unit = {
-    val keepSnaps = snapshots(fs, stateDir).takeRight(retain)
+  /** After committing snapshot `b`: keep the snapshots [[CommitLog]] keeps; delete
+    * every other `s=` dir and every `w=` dir no kept manifest references (which also
+    * sweeps uncommitted junk left by crashes — an uncommitted dir is unreferencable).
+    * `snaps` is the listing taken before the commit; a dir this batch created is
+    * missing from it, and is referenced by `b`'s manifest anyway. */
+  private def prune(fs: FileSystem, stateDir: String, snaps: CommitLog.Versions,
+      b: Long): Unit = {
+    val keepSnaps = snaps.kept(b)
     val referenced = keepSnaps.flatMap(readManifest(fs, stateDir, _).values).toSet
     val keepS = keepSnaps.map(v => s"s=$v").toSet
-    fs.listStatus(new Path(stateDir)).foreach { st =>
+    snaps.listing.entries.foreach { st =>
       val n = st.getPath.getName
       val drop = (n.startsWith("s=") && !keepS.contains(n)) ||
         (n.startsWith("w=") && !referenced.contains(n.stripPrefix("w=").toLong))
@@ -254,7 +239,7 @@ object BucketedGroupingSetsMv {
     * at its manifest-pinned version, with the flat store's read-time finalization. */
   def current(spark: SparkSession, stateDir: String): DataFrame = {
     val fs = fsOf(spark, stateDir)
-    val snap = snapshots(fs, stateDir).lastOption.getOrElse(
+    val snap = snapshots(fs, stateDir).newest.getOrElse(
       throw new IllegalStateException(s"no maintained summary at $stateDir"))
     val manifest = readManifest(fs, stateDir, snap)
     require(manifest.nonEmpty, s"snapshot s=$snap at $stateDir is empty")

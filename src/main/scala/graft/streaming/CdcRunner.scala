@@ -560,7 +560,7 @@ object CdcRunner {
       }.toMap
     }
     private def save(): Unit = {
-      def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      def q(s: String) = "\"" + graft.sinks.CsvManifestSink.jsonEscape(s) + "\""
       val json = cache.toSeq.sortBy(_._1).map { case (t, cols) =>
         q(t) + ": [" + cols.map { case (n, dt) =>
           s"{${q("name")}: ${q(n)}, ${q("type")}: ${q(dt.sql)}}"

@@ -16,13 +16,13 @@ import org.apache.spark.sql.types._
  * chunk-grain dedup is a STORAGE saving (a blob's recipe references mostly
  * already-stored chunks), so the maintained quantity is the unique-chunk census.
  *
- * Replay/crash discipline = the IngestDedup idiom verbatim: `_batch_<id>` marker
- * files beside the data gate idempotent re-application (a replayed batch re-probes
- * the SAME prior index — `batch_id =!= incoming` filters its own half-written
- * append), a LOWER incoming id than the recorded max means the stream's checkpoint
- * was reset against a surviving store and fails loudly, and the store auto-compacts
- * through [[graft.sinks.Bucketing.compactIndexDir]]'s read → tmp → atomic-swap once
- * per-batch appends accumulate.
+ * Replay/crash discipline = the [[IngestDedup]] idiom on the shared [[CommitLog]]:
+ * `_batch_<id>` marker files beside the data gate idempotent re-application (a
+ * replayed batch re-probes the SAME prior index — `batch_id =!= incoming` filters
+ * its own half-written append), a LOWER incoming id than the recorded max means
+ * the stream's checkpoint was reset against a surviving store and fails loudly, and
+ * the store auto-compacts through [[graft.sinks.Bucketing.compactIndexDir]]'s
+ * read → tmp → atomic-swap once per-batch appends accumulate.
  *
  * 100 TB shape: the store is (hash, len) pairs — ~16 bytes per UNIQUE chunk, the
  * natural bucketing key is `chunk_hash`, and the per-batch anti-join shuffles only
@@ -44,26 +44,14 @@ object ChunkStore {
     if (fsOf(spark, dir).exists(new Path(dir))) spark.read.schema(Schema).parquet(dir)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schema)
 
-  private def recordedMax(spark: SparkSession, dir: String): Option[Long] = {
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(new Path(dir))) None
-    else fs.listStatus(new Path(dir)).iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith("_batch_") => n.stripPrefix("_batch_").toLong }
-      .maxOption
-  }
-
   /** Apply one micro-batch of (idCol, binCol) rows; returns the novel-chunk count. */
   def applyBatch(batch: DataFrame, batchId: Long, storeDir: String,
       binCol: String = "blob", idCol: String = "id",
       minLen: Int = 16, maskBits: Int = 4, maxLen: Int = 128,
       autoCompactFiles: Int = DefaultAutoCompactFiles): Long = {
     val spark = batch.sparkSession
-    recordedMax(spark, storeDir).filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"chunk store at $storeDir has applied batch_id $m > incoming $batchId: the " +
-          "stream's checkpoint was reset independently of the store — restore the " +
-          "checkpoint or start a fresh store")
-    }
+    val log = CommitLog.list(spark, storeDir)
+    CommitLog.guard("chunk store", storeDir, log.maxMarked(), batchId)
     // a replayed batch must not probe its own (possibly partial) prior append;
     // NULL batch_id rows (external backfill) still reject duplicates
     val prior = readStore(spark, storeDir)
@@ -79,14 +67,9 @@ object ChunkStore {
       // ones per batch (the IngestDedup coalesce(1) rationale)
       novel.withColumn("batch_id", lit(batchId))
         .coalesce(1).write.mode("append").parquet(storeDir)
-      val fs = fsOf(spark, storeDir)
-      fs.create(new Path(storeDir, s"_batch_$batchId"), true).close()
+      CommitLog.mark(log.fs, storeDir, batchId)
       val n = novel.count()
-      val nData = fs.listStatus(new Path(storeDir)).count { s =>
-        val nm = s.getPath.getName
-        s.isFile && !nm.startsWith("_") && !nm.startsWith(".")
-      }
-      if (nData > autoCompactFiles)
+      if (CommitLog.list(log.fs, storeDir).dataFiles.length > autoCompactFiles)
         graft.sinks.Bucketing.compactIndexDir(spark, storeDir, Schema): Unit
       n
     } finally novel.unpersist(): Unit

@@ -24,8 +24,9 @@ import org.apache.spark.sql.types.DecimalType
  * itself (summing the same delta twice double-counts): batch b reads the newest
  * version < b, merges, and overwrites `v=<b>`. A crash-replay of batch b re-reads the
  * SAME predecessor version — its own half-written output can never feed its merge —
- * recomputes the same merge, and the overwrite converges. Versions older than
- * `retain` are pruned after a successful write (the newest version always survives).
+ * recomputes the same merge, and the overwrite converges. The [[CommitLog]] decides
+ * which versions are committed, refuses a reset checkpoint and prunes after a
+ * successful write (the newest version and its predecessor always survive).
  *
  * Scale: the per-batch Expand is 3× the BATCH (not the corpus), the merge joins a
  * grain-bounded state table, and the rewrite cost is O(grain) per batch. At 100 TB
@@ -57,22 +58,6 @@ object GroupingSetsMv {
       .agg(sum(col("n")).cast("long").as("n"),
         sum(col("s")).cast(DecimalType(38, 2)).as("s"))
 
-  /** COMMITTED versions only: a version exists once its Spark `_SUCCESS` marker
-    * lands. A crash mid-overwrite (parquet overwrite deletes the dir content before
-    * the new commit) leaves a junk `v=` dir with no marker — without the gate,
-    * `current()` would read a half-written (possibly EMPTY) summary as the newest
-    * version, and the prior-selection/reset-guard would trust it too. */
-  private def versions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).iterator
-      .filter(s => s.getPath.getName.startsWith("v=") &&
-        fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-      .toSeq.sorted
-  }
-
   /** Read one committed version dir, finishing any interrupted in-place compaction
     * first (the [[graft.streaming.IncrementalDecontaminate]] read discipline —
     * without it, a crash mid-swap would surface a half-compacted summary). */
@@ -98,9 +83,12 @@ object GroupingSetsMv {
   private[streaming] val SmallFileBytes: Long = 4L << 20
   private[streaming] val TargetFileBytes: Long = 32L << 20
 
-  def compactState(spark: SparkSession, stateDir: String): Int = {
-    val v = versions(spark, stateDir).lastOption.getOrElse(return 0)
-    val p = new Path(s"$stateDir/v=$v")
+  def compactState(spark: SparkSession, stateDir: String): Int =
+    CommitLog.list(spark, stateDir).versions().newest
+      .fold(0)(v => compactVersion(spark, s"$stateDir/v=$v"))
+
+  private def compactVersion(spark: SparkSession, dir: String): Int = {
+    val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.sinks.AtomicSwap.finishSwap(fs, p)
     val data = graft.sinks.AtomicSwap.dataFileNames(fs, p)
@@ -119,51 +107,28 @@ object GroupingSetsMv {
     * [[AdaptiveGroupingSetsMv]] (None when the store has no committed state). */
   private[streaming] def committedState(spark: SparkSession, stateDir: String,
       below: Long = Long.MaxValue): Option[(Long, DataFrame)] =
-    versions(spark, stateDir).filter(_ < below).lastOption
+    CommitLog.list(spark, stateDir).versions().before(below)
       .map(v => v -> readVersion(spark, stateDir, v))
 
   /** Apply one micro-batch: read newest version < batchId, merge, overwrite
     * `v=<batchId>`, prune. Returns the maintained summary row count.
     *
-    * Checkpoint-reset guard (the IncrementalCC `_batch_` idiom, expressed through the
-    * version directory itself — the newest version always survives pruning, so
-    * max(version) IS the max applied batch): an incoming batchId BELOW it means the
-    * stream's checkpoint was reset against a surviving state dir. Without the guard,
-    * batch 0 would merge against no prior (filter `_ < 0`), write v=0, and the prune
-    * would immediately delete it (dropRight keeps the numerically largest versions) —
-    * the batch's data silently dropped and later batches double-counting old state.
-    * batchId == max(version) is a legitimate crash-replay (it re-reads the same
-    * predecessor and overwrites convergently). */
+    * One [[CommitLog]] listing of the state root serves the reset guard, the prior
+    * version and the prune. Only `_SUCCESS`-committed versions count: a crash
+    * mid-overwrite leaves a junk `v=` dir that must never feed a merge. Without the
+    * reset guard, batch 0 after a checkpoint reset would merge against no prior,
+    * write v=0, and the prune would immediately delete it — the batch's data silently
+    * dropped and later batches double-counting old state. */
   def applyBatch(batch: DataFrame, batchId: Long, stateDir: String,
-      d1: String, d2: String, measure: String, retain: Int = 2,
-      autoCompactFiles: Int = 16): Long = {
-    // replay safety depends on the PREDECESSOR version surviving the prune: with
-    // retain=1, a crash-replay of batch b finds no committed version < b and would
-    // commit a delta-only summary — refuse the misconfiguration up front
-    require(retain >= 2, s"retain must be >= 2 for at-least-once replay safety (got $retain)")
+      d1: String, d2: String, measure: String, autoCompactFiles: Int = 16): Long = {
     val spark = batch.sparkSession
-    versions(spark, stateDir).lastOption.filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"summary state at $stateDir has applied batch_id $m > incoming $batchId: the " +
-          "stream's checkpoint was reset independently of the state dir — restore the " +
-          "checkpoint or start a fresh state dir")
-    }
-    val prior = versions(spark, stateDir).filter(_ < batchId).lastOption
-      .map(v => readVersion(spark, stateDir, v))
+    val versions = CommitLog.list(spark, stateDir).versions()
+    versions.guard("summary state", batchId)
+    val prior = versions.before(batchId).map(v => readVersion(spark, stateDir, v))
     val delta = batchSummary(batch, d1, d2, measure)
     val merged = prior.fold(delta)(st => merge(st, delta, d1, d2))
     merged.write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-    // prune AFTER the commit: keep the `retain` newest COMMITTED versions (the
-    // newest pre-existing one is the crash fallback) and drop everything else —
-    // including uncommitted junk dirs left by crashed writes, which the
-    // _SUCCESS-gated versions() already refuses to surface
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val keep = versions(spark, stateDir).takeRight(retain).map(v => s"v=$v").toSet
-    fs.listStatus(p).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("v=") && !keep.contains(n)) fs.delete(s.getPath, true): Unit
-    }
+    versions.prune(batchId)
     // auto-compact past the file-count trip (the IncrementalDecontaminate idiom):
     // the merge shuffle leaves one near-empty file per partition on a grain-bounded
     // summary; rewrite the just-committed version, crash-safe. SIZE-GATED (r13): the
@@ -171,12 +136,10 @@ object GroupingSetsMv {
     // per-file size is already healthy — at a 7.2M-key grain the old count-only trip
     // made EVERY batch pay a full single-threaded rewrite of ~200 MB state (the
     // dominant cost in the r12 soak's 16-20 s/batch flat numbers)
-    val vp = new Path(s"$stateDir/v=$batchId")
-    val dataFiles = fs.listStatus(vp).toSeq.filter(s => s.isFile &&
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+    val dataFiles = CommitLog.list(versions.listing.fs, s"$stateDir/v=$batchId").dataFiles
     if (autoCompactFiles > 0 && dataFiles.length > autoCompactFiles &&
       dataFiles.map(_.getLen).sum / dataFiles.length < SmallFileBytes)
-      compactState(spark, stateDir): Unit
+      compactVersion(spark, s"$stateDir/v=$batchId"): Unit
     // footer metadata, not a count() job: the returned row count is bookkeeping the
     // parquet footers already carry (one fewer Spark job per micro-batch, guide §1.2)
     graft.sinks.ParquetMeta.rowCount(
@@ -186,7 +149,7 @@ object GroupingSetsMv {
   /** The maintained summary at its newest version, with read-time finalization
     * (avg = s/n — derived metrics never live in state). */
   def current(spark: SparkSession, stateDir: String): DataFrame = {
-    val v = versions(spark, stateDir).lastOption.getOrElse(
+    val v = CommitLog.list(spark, stateDir).versions().newest.getOrElse(
       throw new IllegalStateException(s"no maintained summary at $stateDir"))
     readVersion(spark, stateDir, v)
       .withColumn("avg", round(col("s").cast("double") / col("n"), 6))

@@ -36,7 +36,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  * appending a duplicate (the at-least-once hazard of a naive mode=append index:
  * doubled signature rows turn the Hamming shortlist into a duplicate-neighbor
  * list). An uncommitted wave (no `_SUCCESS`) is invisible to [[index]]. The
- * checkpoint-reset guard refuses a batch id below the newest committed wave.
+ * [[CommitLog]] checkpoint-reset guard refuses a batch id below the newest
+ * committed wave or compaction.
  *
  * Contract: ids are append-only (a re-upserted id would legitimately appear in
  * two waves and duplicate its candidate row — updates need a compacting store,
@@ -53,34 +54,27 @@ object IncrementalBqIndex {
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def committedIds(fs: FileSystem, indexDir: String, prefix: String): Seq[Long] = {
-    val p = new Path(indexDir)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).iterator
-      .filter(s => s.getPath.getName.startsWith(prefix) &&
-        fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix(prefix).toLong)
-      .toSeq.sorted
-  }
-
   /** Committed waves: `w=<id>` dirs whose `_SUCCESS` landed. */
   private[streaming] def waves(spark: SparkSession, indexDir: String): Seq[Long] =
-    committedIds(fsOf(spark, indexDir), indexDir, "w=")
+    CommitLog.list(spark, indexDir).versions("w=").ids
 
-  /** Committed compactions: `c=<id>` covers every wave ≤ id. */
-  private[streaming] def compacts(spark: SparkSession, indexDir: String): Seq[Long] =
-    committedIds(fsOf(spark, indexDir), indexDir, "c=")
+  /** The newest batch id the index has applied: its newest committed wave or
+    * compaction (`c=<id>` covers every wave ≤ id) — what the reset guard checks. */
+  private[streaming] def newestBatch(spark: SparkSession, indexDir: String): Option[Long] = {
+    val log = CommitLog.list(spark, indexDir)
+    (log.versions("w=").ids ++ log.versions("c=").ids).maxOption
+  }
 
   /** The live read set: the newest committed compaction (if any) plus every
     * committed wave newer than it — EXCLUDING empty marker waves (an empty batch
     * commits a `_SUCCESS`-only wave to keep batch-id monotonicity for the reset
     * guard, but contributes no readable parquet). */
   private def liveDirs(spark: SparkSession, indexDir: String): Seq[String] = {
-    val fs = fsOf(spark, indexDir)
+    val log = CommitLog.list(spark, indexDir)
     def hasDataFiles(d: String) =
-      fs.listStatus(new Path(d)).exists(s => !s.getPath.getName.startsWith("_"))
-    val comp = compacts(spark, indexDir).lastOption
-    val ws = waves(spark, indexDir).filter(w => comp.forall(_ < w))
+      log.fs.listStatus(new Path(d)).exists(s => !s.getPath.getName.startsWith("_"))
+    val comp = log.versions("c=").newest
+    val ws = log.versions("w=").ids.filter(w => comp.forall(_ < w))
     (comp.map(c => s"$indexDir/c=$c").toSeq ++ ws.map(w => s"$indexDir/w=$w"))
       .filter(hasDataFiles)
   }
@@ -122,13 +116,7 @@ object IncrementalBqIndex {
     val spark = batch.sparkSession
     val fs = fsOf(spark, indexDir)
     checkOrWriteMeta(fs, indexDir, bits)
-    (waves(spark, indexDir) ++ compacts(spark, indexDir)).maxOption
-      .filter(_ > batchId).foreach { m =>
-        throw new IllegalStateException(
-          s"signature index at $indexDir has applied batch_id $m > incoming $batchId: " +
-            "the stream's checkpoint was reset independently of the index dir — " +
-            "restore the checkpoint or rebuild the index")
-      }
+    CommitLog.guard("signature index", indexDir, newestBatch(spark, indexDir), batchId)
     val cpath = s"$indexDir/centroids"
     if (!fs.exists(new Path(cpath, "_SUCCESS")))
       graft.ops.ModelStore.saveCentroids(spark, centroids, cpath)
@@ -189,7 +177,7 @@ object IncrementalBqIndex {
     val fs = fsOf(spark, indexDir)
     val live = liveDirs(spark, indexDir)
     if (live.size <= 1) return 0 // already consolidated (or empty)
-    val coverId = (waves(spark, indexDir) ++ compacts(spark, indexDir)).max
+    val coverId = newestBatch(spark, indexDir).get
     val consolidated = live.map(d => spark.read.parquet(d)).reduce(_ unionByName _)
       .repartition(col("cell")) // ~one file per cell on write and every later read
     consolidated.write.mode("overwrite").partitionBy("cell")

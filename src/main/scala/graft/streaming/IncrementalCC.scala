@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
  * rows written by the batch being (re)applied, so a crash-replayed batch resolves
  * against the same prior state and recomputes byte-identical redirects; appends are
  * harmless under replay because [[resolve]] collapses duplicate rows with
- * `min(parent)` (duplicates always agree); `_batch_<id>` markers make a
+ * `min(parent)` (duplicates always agree); `_batch_<id>` [[CommitLog]] markers make a
  * checkpoint-reset fail loudly instead of silently corrupting labels.
  *
  * Compaction ([[compactStore]], auto-triggered past a file-count trip like the
@@ -83,21 +83,6 @@ object IncrementalCC {
   private def recoverCompaction(fs: org.apache.hadoop.fs.FileSystem, p: Path): Unit =
     graft.sinks.AtomicSwap.finishSwap(fs, p)
 
-  private def recordedMax(spark: SparkSession, dir: String): Option[Long] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith("_batch_") => n.stripPrefix("_batch_").toLong }
-      .maxOption
-  }
-
-  private def recordBatch(spark: SparkSession, dir: String, batchId: Long): Unit = {
-    val p = new Path(dir, s"_batch_$batchId")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(p, true).close()
-  }
-
   /**
    * Resolve `ids` (one `id` column) to component roots by chasing parent redirects to
    * fixpoint. Each round is one left join of the (query-sized) frame against the
@@ -137,12 +122,8 @@ object IncrementalCC {
   def applyBatch(edges: DataFrame, batchId: Long, storeDir: String,
       autoCompactFiles: Int = DefaultAutoCompactFiles): Long = {
     val spark = edges.sparkSession
-    recordedMax(spark, storeDir).filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"label store at $storeDir has applied batch_id $m > incoming $batchId: the " +
-          "stream's checkpoint was reset independently of the store — restore the " +
-          "checkpoint or start a fresh store")
-    }
+    val log = CommitLog.list(spark, storeDir)
+    CommitLog.guard("label store", storeDir, log.maxMarked(), batchId)
     // NULL-batch rows (external backfill) must still resolve: =!= alone is
     // three-valued and would drop them from the probe (the IngestDedup lesson)
     val prior = readStore(spark, storeDir)
@@ -174,38 +155,27 @@ object IncrementalCC {
         redirects.coalesce(1).write.mode("append").parquet(storeDir)
         redirects.count()
       }
-    recordBatch(spark, storeDir, batchId)
-    maybeCompact(spark, storeDir, autoCompactFiles)
+    CommitLog.mark(log.fs, storeDir, batchId)
+    if (autoCompactFiles > 0 &&
+      CommitLog.list(log.fs, storeDir).dataFiles.length > autoCompactFiles)
+      compactStore(spark, storeDir): Unit
     appended
   }
 
-  private def maybeCompact(spark: SparkSession, storeDir: String,
-      autoCompactFiles: Int): Unit = {
-    if (autoCompactFiles <= 0) return
-    val p = new Path(storeDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    val nData = fs.listStatus(p).count { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (nData > autoCompactFiles) compactStore(spark, storeDir): Unit
-  }
-
   /**
-   * Flatten redirect chains to depth 1 — REPLAY-SAFELY: only links with
-   * `batch_id < recordedMax` (or NULL) flatten, and only through each other, so a
-   * crash-replay of the latest batch still probes exactly the prior state it saw the
-   * first time; the latest batch's own links are rewritten verbatim. Flattened rows
-   * keep their original batch_id (all < latest, so exclusion semantics are
-   * unchanged). Same read → tmp → swap ordering as the dedup index compaction: a
-   * crash at any point leaves a resolvable store.
+   * Flatten redirect chains to depth 1 — REPLAY-SAFELY: only links with a batch_id
+   * below the newest `_batch_` marker (or NULL) flatten, and only through each
+   * other, so a crash-replay of the latest batch still probes exactly the prior
+   * state it saw the first time; the latest batch's own links are rewritten
+   * verbatim. Flattened rows keep their original batch_id (all < latest, so
+   * exclusion semantics are unchanged). Same read → tmp → swap ordering as the dedup
+   * index compaction: a crash at any point leaves a resolvable store.
    */
   def compactStore(spark: SparkSession, storeDir: String): Long = {
     val p = new Path(storeDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return 0L
-    val latest = recordedMax(spark, storeDir).getOrElse(Long.MaxValue)
+    val latest = CommitLog.list(fs, storeDir).maxMarked().getOrElse(Long.MaxValue)
     // Group by (id, batch) — with a frozen sentinel standing in for NULL — NOT by id
     // alone: Spark's min ignores NULLs, so `min(batch_id)` over an id carrying both a
     // NULL-batch external-backfill row and a latest-batch row would collapse to

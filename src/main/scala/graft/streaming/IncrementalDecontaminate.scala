@@ -23,11 +23,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
  * union of the first N batches — the `doc_decontaminate` oracle pins the shared
  * result shape cross-engine, and the spec pins the equality at every boundary.
  *
- * Replay/reset safety, exactly [[IngestDedup]]: applied corpus batch ids are
- * `_batch_<id>` marker files beside the output; a replayed batch OVERWRITES its own
- * `batch=<id>` dir (idempotent); an incoming id below the recorded max means a
- * reset checkpoint against surviving state — loud failure. Eval-store additions are
- * versioned the same way on the store dir, append novel digests only (anti-join),
+ * Replay/reset safety, the [[IngestDedup]] idiom on the shared [[CommitLog]]:
+ * applied corpus batch ids are `_batch_<id>` marker files beside the output; a
+ * replayed batch OVERWRITES its own `batch=<id>` dir (idempotent); an incoming id
+ * below the recorded max means a reset checkpoint against surviving state — loud
+ * failure. Eval-store additions are versioned the same way on the store dir, append novel digests only (anti-join),
  * and auto-compact through [[graft.sinks.Bucketing.compactIndexDir]] past a
  * file-count trip.
  *
@@ -58,28 +58,6 @@ object IncrementalDecontaminate {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StoreSchema)
   }
 
-  private def recordedMax(spark: SparkSession, dir: String): Option[Long] = {
-    val p = new Path(dir)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith("_batch_") => n.stripPrefix("_batch_").toLong }
-      .maxOption
-  }
-
-  private def recordBatch(spark: SparkSession, dir: String, batchId: Long): Unit = {
-    val fs = fsOf(spark, dir)
-    fs.create(new Path(dir, s"_batch_$batchId"), true).close()
-  }
-
-  private def resetGuard(spark: SparkSession, dir: String, batchId: Long, what: String): Unit =
-    recordedMax(spark, dir).filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"$what at $dir has applied batch_id $m > incoming $batchId: the stream's " +
-          "checkpoint was reset independently of the state — restore the checkpoint " +
-          "or start a fresh state/output pair")
-    }
-
   /** Add an eval-suite batch to the digest store: one tokenize scan of the batch,
     * novel digests only (anti-join against the store EXCLUDING this batch's own
     * prior rows — the IngestDedup replay convention, so a crash-replay re-derives
@@ -91,7 +69,8 @@ object IncrementalDecontaminate {
       n: Int = 13, textCol: String = "text", idCol: String = "doc_id",
       kernel: Boolean = true, autoCompactFiles: Int = 64): Long = {
     val spark = evalBatch.sparkSession
-    resetGuard(spark, evalDir, batchId, "eval digest store")
+    val log = CommitLog.list(spark, evalDir)
+    CommitLog.guard("eval digest store", evalDir, log.maxMarked(), batchId)
     val prior = readStore(spark, evalDir).filter(
       col("batch_id").isNull || col("batch_id") =!= lit(batchId))
     val novel = graft.ops.TextOps.decontaminateGrams(evalBatch, n, textCol, idCol, kernel)
@@ -102,13 +81,9 @@ object IncrementalDecontaminate {
     // digest-only payload: one near-empty file per shuffle partition otherwise
     novel.withColumn("batch_id", lit(batchId)).coalesce(1)
       .write.mode("append").parquet(evalDir)
-    recordBatch(spark, evalDir, batchId)
-    val fs = fsOf(spark, evalDir)
-    val nData = fs.listStatus(new Path(evalDir)).count { s =>
-      val nm = s.getPath.getName
-      s.isFile && !nm.startsWith("_") && !nm.startsWith(".")
-    }
-    if (autoCompactFiles > 0 && nData > autoCompactFiles)
+    CommitLog.mark(log.fs, evalDir, batchId)
+    if (autoCompactFiles > 0 &&
+      CommitLog.list(log.fs, evalDir).dataFiles.length > autoCompactFiles)
       graft.sinks.Bucketing.compactIndexDir(spark, evalDir, StoreSchema): Unit
     cnt
   }
@@ -120,7 +95,8 @@ object IncrementalDecontaminate {
       n: Int = 13, textCol: String = "text", idCol: String = "doc_id",
       kernel: Boolean = true): Long = {
     val spark = batch.sparkSession
-    resetGuard(spark, outDir, batchId, "decontamination output")
+    val log = CommitLog.list(spark, outDir)
+    CommitLog.guard("decontamination output", outDir, log.maxMarked(), batchId)
     val evalHashes = readStore(spark, evalDir)
       .select("__h").distinct().withColumn("__hit", lit(1L))
     val flagged = graft.ops.TextOps.decontaminateGrams(batch, n, textCol, idCol, kernel)
@@ -132,7 +108,7 @@ object IncrementalDecontaminate {
       .select(col(idCol), col("n_ngrams"), col("n_shared"),
         (col("n_shared") >= 1L).as("contaminated"))
     flagged.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    recordBatch(spark, outDir, batchId)
+    CommitLog.mark(log.fs, outDir, batchId)
     // footer metadata, not a count() job (guide §1.2): one fewer job per micro-batch
     graft.sinks.ParquetMeta.rowCount(
       spark.sparkContext.hadoopConfiguration, s"$outDir/batch=$batchId")

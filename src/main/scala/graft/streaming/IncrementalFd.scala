@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,43 +18,31 @@ import org.apache.spark.sql.functions._
  * GUARANTEE check as `emb_fd_sketch` — PSD + bound against the exact gram of the
  * union — not value equality (the verdict-gate discipline).
  *
- * Replay safety is state versioning: batch b merges the newest committed version
- * < b and overwrites `v=<b>` (crash-replay re-reads the same predecessor); an
- * incoming batchId below the max applied version is a reset checkpoint against
- * surviving state — loud failure. `_SUCCESS`-gated versions; prune after commit.
+ * Replay safety is state versioning through the [[CommitLog]]: batch b merges the
+ * newest committed version < b and overwrites `v=<b>` (crash-replay re-reads the
+ * same predecessor); an incoming batchId below the max applied version is a reset
+ * checkpoint against surviving state — loud failure. `_SUCCESS`-gated versions;
+ * prune after commit.
  *
  * Scale shape: per-batch work is one distributed FD aggregate over the BATCH; state
  * is O(ℓ·d) — constant, the smallest state of any incremental operator here.
  */
 object IncrementalFd {
 
-  private def versions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).iterator
-      .filter(s => s.getPath.getName.startsWith("v=") &&
-        fs.exists(new Path(s.getPath, "sketch/_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-      .toSeq.sorted
-  }
+  private val Markers = Seq("sketch/_SUCCESS")
 
   /** Apply one micro-batch: guard, distributed batch sketch, driver merge into the
     * newest committed state, overwrite `v=<batchId>`, prune. Returns sketch rows. */
   def applyBatch(batch: DataFrame, batchId: Long, stateDir: String, l: Int = 16,
-      vecCol: String = "embedding", retain: Int = 2): Long = {
+      vecCol: String = "embedding"): Long = {
     val spark = batch.sparkSession
     import spark.implicits._
-    versions(spark, stateDir).lastOption.filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"fd state at $stateDir has applied batch_id $m > incoming $batchId: the " +
-          "stream's checkpoint was reset independently of the state dir — restore " +
-          "the checkpoint or start a fresh state dir")
-    }
+    val vs = CommitLog.list(spark, stateDir).versions(markers = Markers)
+    vs.guard("fd state", batchId)
     val batchSketch = batch
       .agg(graft.functions.FdSketch.fdSketchAgg(col(vecCol), l).as("b"))
       .head().getSeq[scala.collection.Seq[Double]](0).map(_.toArray)
-    val prior = versions(spark, stateDir).filter(_ < batchId).lastOption
+    val prior = vs.before(batchId)
       .map(v => spark.read.parquet(s"$stateDir/v=$v/sketch")
         .orderBy(col("i")).collect()
         .map(_.getSeq[Double](1).toArray).toSeq)
@@ -74,19 +61,13 @@ object IncrementalFd {
     merged.zipWithIndex.map { case (row, i) => (i, row.toSeq) }
       .toDF("i", "vec")
       .coalesce(1).write.mode("overwrite").parquet(s"$stateDir/v=$batchId/sketch")
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val keep = versions(spark, stateDir).takeRight(retain).map(v => s"v=$v").toSet
-    fs.listStatus(p).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("v=") && !keep.contains(n)) fs.delete(s.getPath, true): Unit
-    }
+    vs.prune(batchId)
     merged.length.toLong
   }
 
   /** The maintained sketch rows at the newest version. */
   def current(spark: SparkSession, stateDir: String): Seq[Array[Double]] = {
-    val v = versions(spark, stateDir).lastOption.getOrElse(
+    val v = CommitLog.list(spark, stateDir).versions(markers = Markers).newest.getOrElse(
       throw new IllegalStateException(s"no maintained fd state at $stateDir"))
     spark.read.parquet(s"$stateDir/v=$v/sketch")
       .orderBy(col("i")).collect().map(_.getSeq[Double](1).toArray).toSeq

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,10 +19,10 @@ import org.apache.spark.sql.functions._
  * `doc_rake` oracle pins the shared result cross-engine; the spec pins the equality
  * at every batch boundary).
  *
- * Replay safety is state versioning, exactly [[IncrementalTextRank]]: batch b merges
- * the newest committed version < b and overwrites `v=<b>`; an incoming batchId below
- * the max applied version is a reset checkpoint against surviving state — loud
- * failure. A version is committed once BOTH table writes carry `_SUCCESS`.
+ * Replay safety is state versioning through the [[CommitLog]]: batch b merges the
+ * newest committed version < b and overwrites `v=<b>`; an incoming batchId below the
+ * max applied version is a reset checkpoint against surviving state — loud failure.
+ * A version is committed once BOTH table writes carry `_SUCCESS`.
  *
  * Scale shape: per-batch work is one tokenize+phrase pass over the BATCH plus a
  * key-sum merge into vocabulary-/phrase-bounded state (Heaps-law sublinear); the
@@ -32,31 +31,17 @@ import org.apache.spark.sql.functions._
  */
 object IncrementalRake {
 
-  /** COMMITTED versions only: both `words` and `phrases` carry `_SUCCESS`. */
-  private def versions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).iterator
-      .filter(s => s.getPath.getName.startsWith("v=") &&
-        fs.exists(new Path(s.getPath, "words/_SUCCESS")) &&
-        fs.exists(new Path(s.getPath, "phrases/_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-      .toSeq.sorted
-  }
+  /** A version is COMMITTED once both `words` and `phrases` carry `_SUCCESS`. */
+  private val Markers = Seq("words/_SUCCESS", "phrases/_SUCCESS")
 
   /** Apply one micro-batch: guard, merge newest version < batchId, overwrite
     * `v=<batchId>` (words + phrases side by side), prune. Returns the vocab size. */
   def applyBatch(batch: DataFrame, batchId: Long, stateDir: String,
-      idCol: String = "doc_id", textCol: String = "text", retain: Int = 2): Long = {
+      idCol: String = "doc_id", textCol: String = "text"): Long = {
     val spark = batch.sparkSession
-    versions(spark, stateDir).lastOption.filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"rake state at $stateDir has applied batch_id $m > incoming $batchId: " +
-          "the stream's checkpoint was reset independently of the state dir — " +
-          "restore the checkpoint or start a fresh state dir")
-    }
-    val prior = versions(spark, stateDir).filter(_ < batchId).lastOption
+    val vs = CommitLog.list(spark, stateDir).versions(markers = Markers)
+    vs.guard("rake state", batchId)
+    val prior = vs.before(batchId)
     val (wordsD, phrasesD) = graft.ops.TextOps.rakeDeltas(batch, idCol, textCol)
     val words = prior.map(v => spark.read.parquet(s"$stateDir/v=$v/words"))
       .fold(wordsD)(st => st.unionByName(wordsD)
@@ -67,15 +52,7 @@ object IncrementalRake {
         .groupBy("phrase").agg(sum(col("occ")).cast("long").as("occ")))
     words.write.mode("overwrite").parquet(s"$stateDir/v=$batchId/words")
     phrases.write.mode("overwrite").parquet(s"$stateDir/v=$batchId/phrases")
-    // prune AFTER the commit: keep the `retain` newest COMMITTED versions; junk
-    // dirs from crashed writes are invisible to the _SUCCESS-gated versions()
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val keep = versions(spark, stateDir).takeRight(retain).map(v => s"v=$v").toSet
-    fs.listStatus(p).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("v=") && !keep.contains(n)) fs.delete(s.getPath, true): Unit
-    }
+    vs.prune(batchId)
     // footer metadata, not a count() job (guide §1.2): one fewer job per micro-batch
     graft.sinks.ParquetMeta.rowCount(
       spark.sparkContext.hadoopConfiguration, s"$stateDir/v=$batchId/words")
@@ -84,7 +61,7 @@ object IncrementalRake {
   /** The maintained phrase ranking at the newest version — the same exact-integer
     * scoring and top-k as [[graft.ops.TextOps.rakeFromCounts]]. */
   def current(spark: SparkSession, stateDir: String, topK: Int = 20): DataFrame = {
-    val v = versions(spark, stateDir).lastOption.getOrElse(
+    val v = CommitLog.list(spark, stateDir).versions(markers = Markers).newest.getOrElse(
       throw new IllegalStateException(s"no maintained rake state at $stateDir"))
     graft.ops.TextOps.rakeFromCounts(
       spark.read.parquet(s"$stateDir/v=$v/words"),

@@ -54,13 +54,8 @@ object IncrementalSemDedup {
     val spark = batch.sparkSession
     // the reset guard must fire BEFORE any write (the index's own guard would
     // only fire after the vec wave was already overwritten)
-    IncrementalBqIndex.waves(spark, idxDir(storeDir)).maxOption
-      .filter(_ > batchId).foreach { m =>
-        throw new IllegalStateException(
-          s"semantic-dedup store at $storeDir has applied batch_id $m > incoming " +
-            s"$batchId: the stream's checkpoint was reset independently of the " +
-            "store — restore the checkpoint or start a fresh store")
-      }
+    CommitLog.guard("semantic-dedup store", storeDir,
+      IncrementalBqIndex.newestBatch(spark, idxDir(storeDir)), batchId)
     // Lineage-cut the (micro-batch-bounded) input once: the batch plan is referenced
     // by the probe queries, the anti-join left side and (through crossSurvivors)
     // semDeDup's a/b pair sides plus the admitted projection — ~6 references that
@@ -70,7 +65,7 @@ object IncrementalSemDedup {
     // (an index with no signatures yet — first batch, or only empty waves — means
     // no admitted corpus to collide with)
     val crossSurvivors =
-      (if (!IncrementalBqIndex.hasData(spark, idxDir(storeDir))) batchC
+      if (!IncrementalBqIndex.hasData(spark, idxDir(storeDir))) batchC
       else {
         val near = VectorOps.bqTopKFromIvfIndex(
             IncrementalBqIndex.index(spark, idxDir(storeDir)),
@@ -78,11 +73,12 @@ object IncrementalSemDedup {
             nProbe, shortlist, bits, idCol, vecCol)
           .filter(col("sim") >= eps)
           .select(col("query_id").as(idCol))
-        batchC.join(near, Seq(idCol), "left_anti")
         // cut again: the survivors (≤ batch rows) feed semDeDup's pair sides, the
         // kept-id semi-join and the admitted projection — without it the whole
-        // index-probe anti-join chain re-runs per reference
-      }).localCheckpoint(eager = false)
+        // index-probe anti-join chain re-runs per reference (the first-batch branch
+        // is batchC itself, already cut)
+        batchC.join(near, Seq(idCol), "left_anti").localCheckpoint(eager = false)
+      }
     // intra-batch: in-cell pairwise dominance under the same quantizer
     val keptIds = VectorOps.semDeDup(crossSurvivors, eps, trained = Some(centroids),
         idCol = idCol, vecCol = vecCol)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -20,11 +19,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  * the first N batches (the `doc_textrank` oracle pins the shared result shape
  * cross-engine, and the spec pins the equality at every batch boundary).
  *
- * Replay safety is state versioning, exactly [[GroupingSetsMv.applyBatch]]: batch b
- * merges the newest version < b and overwrites `v=<b>` (a crash-replay re-reads the
- * same predecessor and converges); an incoming batchId below the max applied version
- * means a reset checkpoint against surviving state — loud failure. Versions older
- * than `retain` are pruned after a successful write.
+ * Replay safety is state versioning through the [[CommitLog]]: batch b merges the
+ * newest version < b and overwrites `v=<b>` (a crash-replay re-reads the same
+ * predecessor and converges); an incoming batchId below the max applied version
+ * means a reset checkpoint against surviving state — loud failure. All but the two
+ * newest versions are pruned after a successful write.
  *
  * Scale shape: the per-batch work is one tokenize scan of the BATCH plus a key-sum
  * merge into vocabulary-sized state (Heaps' law: vocab and distinct-bigram tables
@@ -50,34 +49,20 @@ object IncrementalTextRank {
     (uni, pairs)
   }
 
-  /** COMMITTED versions only (the GroupingSetsMv gate): a version exists once BOTH
-    * its table writes carry Spark's `_SUCCESS` marker — uni writes before pairs, so
-    * a crash between them leaves a junk dir that must stay invisible to
-    * prior-selection, the reset guard and `current()`. */
-  private def versions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).iterator
-      .filter(s => s.getPath.getName.startsWith("v=") &&
-        fs.exists(new Path(s.getPath, "uni/_SUCCESS")) &&
-        fs.exists(new Path(s.getPath, "pairs/_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-      .toSeq.sorted
-  }
+  /** A version is COMMITTED once BOTH its table writes carry
+    * Spark's `_SUCCESS` marker — uni writes before pairs, so a crash between them
+    * leaves a junk dir that must stay invisible to prior-selection, the reset guard
+    * and `current()`. */
+  private val Markers = Seq("uni/_SUCCESS", "pairs/_SUCCESS")
 
   /** Apply one micro-batch: guard, merge newest version < batchId, overwrite
     * `v=<batchId>` (uni + pairs side by side), prune. Returns the vocabulary size. */
   def applyBatch(batch: DataFrame, batchId: Long, stateDir: String,
-      textCol: String = "text", retain: Int = 2): Long = {
+      textCol: String = "text"): Long = {
     val spark = batch.sparkSession
-    versions(spark, stateDir).lastOption.filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"textrank state at $stateDir has applied batch_id $m > incoming $batchId: " +
-          "the stream's checkpoint was reset independently of the state dir — " +
-          "restore the checkpoint or start a fresh state dir")
-    }
-    val prior = versions(spark, stateDir).filter(_ < batchId).lastOption
+    val vs = CommitLog.list(spark, stateDir).versions(markers = Markers)
+    vs.guard("textrank state", batchId)
+    val prior = vs.before(batchId)
     val (uniD, pairD) = batchDelta(batch, textCol)
     val uni = prior.map(v => spark.read.parquet(s"$stateDir/v=$v/uni"))
       .fold(uniD)(st => st.unionByName(uniD)
@@ -87,16 +72,7 @@ object IncrementalTextRank {
         .groupBy("a", "b").agg(sum(col("n")).cast("long").as("n")))
     uni.write.mode("overwrite").parquet(s"$stateDir/v=$batchId/uni")
     pairs.write.mode("overwrite").parquet(s"$stateDir/v=$batchId/pairs")
-    // prune AFTER the commit: keep the `retain` newest COMMITTED versions, drop
-    // everything else including uncommitted junk from crashed writes (invisible to
-    // the _SUCCESS-gated versions() either way)
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val keep = versions(spark, stateDir).takeRight(retain).map(v => s"v=$v").toSet
-    fs.listStatus(p).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("v=") && !keep.contains(n)) fs.delete(s.getPath, true): Unit
-    }
+    vs.prune(batchId)
     // footer metadata, not a count() job (guide §1.2): one fewer job per micro-batch
     graft.sinks.ParquetMeta.rowCount(
       spark.sparkContext.hadoopConfiguration, s"$stateDir/v=$batchId/uni")
@@ -107,7 +83,7 @@ object IncrementalTextRank {
     * [[graft.ops.TextOps.textRank]], recomputed on the bounded state graph. */
   def current(spark: SparkSession, stateDir: String,
       minCount: Long = 5, topK: Int = 50): DataFrame = {
-    val v = versions(spark, stateDir).lastOption.getOrElse(
+    val v = CommitLog.list(spark, stateDir).versions(markers = Markers).newest.getOrElse(
       throw new IllegalStateException(s"no maintained textrank state at $stateDir"))
     val freq = spark.read.parquet(s"$stateDir/v=$v/uni")
       .filter(col("c") >= minCount)

@@ -77,10 +77,11 @@ object Scd2Stream {
    *
    * Layout under `dir`: `current/` (the history parquet), `_applied_<batchId>` marker
    * files. Replay-safe: foreachBatch re-delivers the last uncommitted batch after a
-   * restart, so a batch id at or below the recorded maximum is skipped (the
-   * [[IngestDedup]] marker idiom). The swap (write `next/` → delete `current/` →
-   * rename) has the same documented non-atomic window as index compaction: a crash
-   * between delete and rename leaves the full merged copy in `next/` for restore.
+   * restart, so a batch id at or below the recorded maximum is skipped (read through
+   * the [[CommitLog]] marker log, which skips here instead of throwing). The swap
+   * (write `next/` → delete `current/` → rename) has the same documented non-atomic
+   * window as index compaction: a crash between delete and rename leaves the full
+   * merged copy in `next/` for restore.
    * First batch bootstraps with [[graft.operators.Cdc.scd2History]].
    */
   def mergeBatchSink(dir: String, keys: Seq[String], attr: String,
@@ -88,17 +89,12 @@ object Scd2Stream {
     val spark = batch.sparkSession
     val base = new org.apache.hadoop.fs.Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val applied =
-      if (!fs.exists(base)) None
-      else fs.listStatus(base).iterator.map(_.getPath.getName)
-        .collect { case n if n.startsWith("_applied_") => n.stripPrefix("_applied_").toLong }
-        .maxOption
-    if (applied.forall(_ < batchId)) {
+    if (CommitLog.list(fs, dir).maxMarked("_applied_").forall(_ < batchId)) {
       val current = new org.apache.hadoop.fs.Path(base, "current")
       val next = new org.apache.hadoop.fs.Path(base, "next")
       if (batch.isEmpty) { // nothing to merge; still record progress
         fs.mkdirs(base)
-        fs.create(new org.apache.hadoop.fs.Path(base, s"_applied_$batchId"), true).close()
+        CommitLog.mark(fs, dir, batchId, "_applied_")
       } else {
         val merged =
           if (fs.exists(current))
@@ -109,7 +105,7 @@ object Scd2Stream {
         merged.write.mode("overwrite").parquet(next.toString)
         fs.delete(current, true)
         fs.rename(next, current)
-        fs.create(new org.apache.hadoop.fs.Path(base, s"_applied_$batchId"), true).close()
+        CommitLog.mark(fs, dir, batchId, "_applied_")
       }
     }
   }

@@ -1111,9 +1111,9 @@ class StreamingSpec extends SparkSpec {
     assert(ex.getMessage.contains("checkpoint"))
     assert(canon(B.current(spark, bkt)) == flat3,
       "a rejected reset batch must not disturb the maintained state")
-    // prune keeps only `retain` snapshots and the write dirs they reference
+    // prune keeps only the two newest snapshots and the write dirs they reference
     val snaps = fs.listStatus(new Path(bkt)).map(_.getPath.getName).filter(_.startsWith("s="))
-    assert(snaps.length <= 2, s"prune must keep <= retain snapshots, kept ${snaps.toSeq}")
+    assert(snaps.length <= 2, s"prune must keep <= 2 snapshots, kept ${snaps.toSeq}")
     // nBuckets guard (ADVICE r12): a restart over the surviving state dir with a
     // DIFFERENT modulus would silently split keys across old-hash and new-hash
     // buckets (current() is a plain union — duplicate keys, no failure). The meta
@@ -1135,15 +1135,6 @@ class StreamingSpec extends SparkSpec {
     GroupingSetsMv.applyBatch(b1, 4L, flat, "priority", "status", "amount")
     assert(canon(B.current(spark, bkt)) == canon(GroupingSetsMv.current(spark, flat)),
       "the store must keep working with the original parameters after a rejected mismatch")
-    // retain guard (ADVICE r12): replay safety needs the predecessor snapshot to
-    // survive prune — retain=1 is a silent data-loss configuration, refuse it
-    intercept[IllegalArgumentException] {
-      B.applyBatch(b1, 5L, bkt, "priority", "status", "amount",
-        nBuckets = nBuckets, retain = 1)
-    }
-    intercept[IllegalArgumentException] {
-      GroupingSetsMv.applyBatch(b1, 5L, flat, "priority", "status", "amount", retain = 1)
-    }
   }
 
   test("incremental BQ index: replay converges, guards refuse resets/mixed bits/foreign centroids") {
